@@ -1246,30 +1246,12 @@ def _minhash_pairs(spark, sf_dir):
                                    threshold=0.5)
 
 
-# Session-scoped cluster-labels cache (VERDICT r3 #6): dup_clusters
-# materializes its labels via localCheckpoint, so the returned DataFrame
-# is a handle to already-computed blocks. The primitive cluster queries
-# ALWAYS recompute (and refresh the cache) so their bench timings stay
-# honest; only the composed end-use query (dedup_keep_canonical) reuses
-# the session's materialized intermediate — the way a real pipeline would
-# share one pairs→clusters computation instead of rebuilding it.
-_CC_LABELS_CACHE: dict[tuple, object] = {}
-
-
-def _cc_cache_key(spark, sf_dir) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
 @query("dedup_clusters", oracle=_DUP_CLUSTERS_ORACLE)
 def dedup_clusters(spark, sf_dir):
     """Near-dup pairs -> duplicate clusters (connected components, iterative
     min-label propagation); oracle is the recursive-CTE transitive closure
     over the identical minhash pair set."""
-    labels = dedup.dup_clusters(_minhash_pairs(spark, sf_dir))
-    if len(_CC_LABELS_CACHE) > 8:
-        _CC_LABELS_CACHE.clear()
-    _CC_LABELS_CACHE[_cc_cache_key(spark, sf_dir)] = labels
-    return labels
+    return dedup.dup_clusters(_minhash_pairs(spark, sf_dir))
 
 
 @query("dedup_clusters_star", oracle=_DUP_CLUSTERS_ORACLE)
@@ -1279,9 +1261,7 @@ def dedup_clusters_star(spark, sf_dir):
     O(log² n) instead of component diameter, the adversarial-long-chain
     form. Identical output contract, so the same transitive-closure
     oracle verifies it."""
-    labels = dedup.dup_clusters(_minhash_pairs(spark, sf_dir), algorithm="star")
-    _CC_LABELS_CACHE[_cc_cache_key(spark, sf_dir)] = labels
-    return labels
+    return dedup.dup_clusters(_minhash_pairs(spark, sf_dir), algorithm="star")
 
 
 @query(
@@ -1298,15 +1278,9 @@ def dedup_keep_canonical(spark, sf_dir):
     non-canonical cluster member removed (the min-id doc survives per
     component; docs in no pair pass through). Composes minhash LSH
     pairs -> connected components -> broadcast-able anti-join — the
-    actual 'deduplicate my corpus' operation a training-data team runs.
-    Reuses the session's materialized cluster labels when a cluster query
-    already ran (the labels are localCheckpoint blocks — see
-    _CC_LABELS_CACHE); computes them fresh otherwise."""
+    actual 'deduplicate my corpus' operation a training-data team runs."""
     docs = load_table(spark, sf_dir, "documents")
-    clusters = _CC_LABELS_CACHE.get(_cc_cache_key(spark, sf_dir))
-    if clusters is None:
-        clusters = dedup.dup_clusters(_minhash_pairs(spark, sf_dir))
-        _CC_LABELS_CACHE[_cc_cache_key(spark, sf_dir)] = clusters
+    clusters = dedup.dup_clusters(_minhash_pairs(spark, sf_dir))
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     return docs.join(losers, on="doc_id", how="left_anti").select(
         "doc_id", "source"

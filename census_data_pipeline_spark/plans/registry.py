@@ -19,42 +19,29 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
 
-# Reentrancy depth for the per-query cache sweep below (registered
-# queries never call each other today; the guard keeps that safe if one
-# ever does).
-_ACTIVE_DEPTH = 0
-
-
 def query(name: str, oracle: str | None = None):
     """Register a query; ``oracle=None`` marks a rows-only check
     (non-SQL-expressible op, per the driver contract).
 
-    r13: every top-level query invocation first drops the SQL cache.
-    The iterative operators (trained-in-engine fits, the graph
-    community tier) persist intermediates that must stay live until the
-    caller executes the returned frame — so they cannot unpersist
-    themselves — and a long-lived session (bench.py runs 215 queries ×
-    4 passes) otherwise accumulates hundreds of cached frames whose
-    memory pressure and GC tax every later query (measured: the same
-    query runs seconds slower late in a bench session than in a fresh
-    one). Clearing at query START is safe: cached data is a
-    performance-only artifact — any still-referenced frame recomputes
-    from lineage — and the driver/bench execute each query's result
+    Every registered invocation first drops the SQL cache. The iterative
+    operators (trained-in-engine fits, the graph community tier) persist
+    intermediates that must stay live until the caller executes the
+    returned frame, so they cannot unpersist themselves, and a long-lived
+    session (bench.py runs 215 queries × 4 passes) would otherwise
+    accumulate hundreds of cached frames whose memory pressure and GC tax
+    slow every later query (measured: the same query runs seconds slower
+    late in a bench session than in a fresh one). Clearing at query start is safe: cached data
+    is a performance-only artifact (any still-referenced frame recomputes
+    from lineage), and the driver and bench execute each query's result
     before building the next."""
 
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            global _ACTIVE_DEPTH
-            if _ACTIVE_DEPTH == 0:
-                try:
-                    spark.catalog.clearCache()
-                except Exception:
-                    pass
-            _ACTIVE_DEPTH += 1
             try:
-                return fn(spark, sf_dir)
-            finally:
-                _ACTIVE_DEPTH -= 1
+                spark.catalog.clearCache()
+            except Exception:
+                pass
+            return fn(spark, sf_dir)
 
         wrapped.__name__ = getattr(fn, "__name__", name)
         wrapped.__doc__ = fn.__doc__
